@@ -2,7 +2,6 @@
 
 Reference citations (/root/reference):
   - CATEGORIES_TO_KEEP: ``Main.py:43``
-  - BATCH_SIZE (enrichment micro-batch): ``Main.py:47``
   - raw JSONL schema: inferred at ``Main.py:147``; we pin it explicitly
     (schema inference over 100 TB of JSONL is a full extra pass and is
     nondeterministic across file orders — a fixed StructType is the
@@ -15,10 +14,6 @@ from pyspark.sql import types as T
 
 # Stage-1 category filter (Main.py:43).
 CATEGORIES_TO_KEEP: list[str] = ["WORLD NEWS", "POLITICS", "BUSINESS", "TECH", "MONEY"]
-
-# Enrichment micro-batch granularity (Main.py:47).  In Spark this is the
-# Arrow batch size fed to the enrichment mapInPandas UDF, not a loop bound.
-BATCH_SIZE: int = 100
 
 # Raw news JSONL schema (News_Category_Dataset_v3.json rows; FIXTURES.md F1).
 RAW_NEWS_SCHEMA = T.StructType(

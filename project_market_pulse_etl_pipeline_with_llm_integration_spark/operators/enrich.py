@@ -3,13 +3,16 @@
 The reference loops rows sequentially, calling one chat-completion per
 article with a 0.2 s sleep (≤5 rows/s ceiling, BASELINE.md).  Here the
 whole stage is ONE ``mapInPandas`` operator: each executor task pulls
-Arrow batches (sized to the reference's BATCH_SIZE=100 via
-``spark.sql.execution.arrow.maxRecordsPerBatch``), runs the enrichment
-function per row with a lazily-created per-worker client (mirroring the
-lazy global client at ``Main.py:29-32,92-101``) and per-task rate
-limiting, and emits input columns + the three LLM fields together — the
-reference's left join (O16, ``Main.py:254``) and concat (O17,
-``Main.py:255``) disappear from the plan entirely.
+Arrow batches of the session's ``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows, runs the enrichment function per row with a lazily-created
+per-worker client (mirroring the lazy global client at
+``Main.py:29-32,92-101``), sleeps after each call like the reference's
+per-row ``time.sleep`` (``Main.py:249-250``), and emits input columns +
+the three LLM fields together — the reference's left join (O16,
+``Main.py:254``) and concat (O17, ``Main.py:255``) disappear from the
+plan entirely.  The reference's 100-row ``BATCH_SIZE`` (``Main.py:47``)
+only bounds its driver loop; it changes no output, so the stage neither
+mirrors it nor touches any session conf.
 
 Faithful semantics preserved:
   * prompt template (``Main.py:76-83``), gpt-3.5-turbo, temperature=0,
@@ -22,7 +25,7 @@ Faithful semantics preserved:
     per-executor ``current_timestamp()`` (``Main.py:259``)
 
 Scale notes: concurrent task rates ADD, so each of N tasks sleeps
-``N * rate_delay`` per row — the sum stays at the reference's
+``N * rate_delay`` after each row's call — the sum stays at the reference's
 single-thread ``1/rate_delay`` rows/s budget.  Transport is injectable
 (``set_transport``) so tests never touch the network.
 """
@@ -41,7 +44,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from project_market_pulse_etl_pipeline_with_llm_integration_spark.config import (
-    BATCH_SIZE,
     CATEGORIES_TO_KEEP,
     ERROR_SENTINEL,
     OFFLINE_TRIPLE,
@@ -173,12 +175,11 @@ def enrich(
 
     def run_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            triples = [
-                enrich_one(t, c, transport=transport_fn, disabled=disabled)
-                for t, c in zip(pdf["title"].tolist(), pdf["content"].tolist())
-            ]
-            if per_task_delay:
-                time.sleep(per_task_delay * len(pdf))
+            triples = []
+            for t, c in zip(pdf["title"].tolist(), pdf["content"].tolist()):
+                triples.append(enrich_one(t, c, transport=transport_fn, disabled=disabled))
+                if per_task_delay:
+                    time.sleep(per_task_delay)
             res = pdf.copy()
             res["sentiment_llm"] = [x[0] for x in triples]
             res["category_llm"] = [x[1] for x in triples]
@@ -203,8 +204,6 @@ def enrich_to_parquet(
     try:
         df = spark.read.parquet(input_path)
         df = exact_sample(df, sample_size, seed=42)
-        # Mirror the reference's micro-batch granularity at the Arrow layer.
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(BATCH_SIZE))
         enriched = enrich(df, rate_delay=rate_delay)
         return write_parquet_timestamped(
             enriched, output_folder, "final_enriched_data", single_file=single_file

@@ -282,6 +282,12 @@ def _winnow_id_guard(where: str, id_col: str):
     )
 
     def make():
+        # PRECONDITION: the kernel's input is hash-partitioned by id_col
+        # (the callers' ``.repartition(F.col(id_col))`` right before
+        # mapInPandas).  The seen-set is per task, so without that
+        # colocation two copies of an id in different partitions pass
+        # unnoticed and corrupt per-document fingerprint sets.  Keep the
+        # repartition and the mapInPandas together.
         seen: set = set()
 
         def check(ids) -> None:
@@ -413,8 +419,11 @@ def with_winnow_fingerprint(
       size gate needed): one mapInPandas pass computes each document's
       fingerprint set in Python (md5 via hashlib is the identical
       digest; see ``_py_winnow_fp_set`` for the step-by-step identity
-      argument); the uniqueness contract rides a broadcast 1-row
-      assert branch instead of the windowed count.
+      argument).  Instead of the windowed count, the uniqueness
+      contract is enforced in the kernel: the input is
+      ``repartition(id)``-ed so every copy of an id lands in one
+      partition, where a per-partition seen-set raises on a null or
+      repeated id (``_winnow_id_guard``).
     - ``"relational"``: explode -> window-frame min -> collect_set,
       NOT nested array lambdas: higher-order functions evaluate
       interpreted (outside whole-stage codegen) with no

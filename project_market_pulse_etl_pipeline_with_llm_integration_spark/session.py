@@ -13,11 +13,18 @@ coalescing makes over-provisioning cheap.
 
 from __future__ import annotations
 
+import atexit
+import logging
 import os
+import sys
+import tempfile
 import weakref
 import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 _PKG_ZIP: str | None = None
 
@@ -31,31 +38,100 @@ _PKG_ZIP: str | None = None
 # equivalent; a WeakSet keeps dead sessions collectable.
 _PINNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
+# SparkContexts the package zip was already added to (addPyFile is
+# per-context; get_spark and ensure_engine_confs both ship).
+_SHIPPED: "weakref.WeakSet[SparkContext]" = weakref.WeakSet()
+
+# Archive (st_mtime_ns, st_size, st_ino) at each zipimporter's last index
+# read; see _guard_zip_index.
+_ZIP_INDEX_STAT: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _guard_zip_index() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's index
+    only when the archive file changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``pyspark/worker_util.py``).  Before Python 3.13 that
+    makes every zipimporter on ``sys.path_importer_cache`` re-read its
+    archive's whole central directory: a worker that has run a pandas UDF
+    holds ~16 of them over pyspark.zip (1,328 entries), the spark-core jar
+    (5,359 entries) and py4j, which cProfile put at ~0.5 s of CPU per task.
+    Wrapped, an importer re-reads only when the archive's
+    ``(st_mtime_ns, st_size, st_ino)`` differs from the values taken at
+    its own last read, so a zip rewritten or replaced in place is still
+    picked up.  Python 3.13 made the call lazy (it only drops the cached
+    index), so there the function does nothing.
+
+    Runs when this module is imported, which every Python worker does when
+    it unpickles an engine UDF.  Idempotent.
+    """
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+
+    read_index = zipimport.zipimporter.invalidate_caches
+    if getattr(read_index, "stat_guarded", False):
+        return
+
+    def invalidate_caches(self):
+        # Stat before reading: a write racing the read leaves the older
+        # stat recorded, so the next call reads again.
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None  # archive gone: read, which drops the stale index
+        if key is None or _ZIP_INDEX_STAT.get(self) != key:
+            read_index(self)
+            _ZIP_INDEX_STAT[self] = key
+
+    invalidate_caches.stat_guarded = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_guard_zip_index()
+
+
+def _package_zip() -> str:
+    """Zip this package's sources once per process, under the temp dir
+    with a name unique to the process (removed at exit)."""
+    global _PKG_ZIP
+    if _PKG_ZIP is None:
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        pkg_name = os.path.basename(pkg_dir)
+        fd, zip_path = tempfile.mkstemp(prefix=f"{pkg_name}_", suffix=".zip")
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        zf.write(full, os.path.join(pkg_name, os.path.relpath(full, pkg_dir)))
+        atexit.register(_remove_quietly, zip_path)
+        _PKG_ZIP = zip_path
+    return _PKG_ZIP
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
+
 
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable on executor Python workers even when
     the driver process was launched from a different cwd (mapInPandas
-    closures reference package functions by module path).  Zips the
-    package once per process and registers it via addPyFile."""
-    global _PKG_ZIP
+    closures reference package functions by module path).  Adds the
+    package zip once per SparkContext."""
+    sc = spark.sparkContext
+    if sc in _SHIPPED:
+        return
     try:
-        if _PKG_ZIP is None:
-            pkg_dir = os.path.dirname(os.path.abspath(__file__))
-            pkg_name = os.path.basename(pkg_dir)
-            zip_path = os.path.join("/tmp", f"{pkg_name}_shipped.zip")
-            with zipfile.ZipFile(zip_path, "w") as zf:
-                for root, _dirs, files in os.walk(pkg_dir):
-                    for fn in files:
-                        if fn.endswith(".py"):
-                            full = os.path.join(root, fn)
-                            rel = os.path.join(
-                                pkg_name, os.path.relpath(full, pkg_dir)
-                            )
-                            zf.write(full, rel)
-            _PKG_ZIP = zip_path
-        spark.sparkContext.addPyFile(_PKG_ZIP)
-    except Exception:
-        pass  # already added, or a deployment where addPyFile is restricted
+        sc.addPyFile(_package_zip())
+    except Exception:  # a deployment where addPyFile is restricted
+        _log.warning("could not ship the engine package to executors", exc_info=True)
+    _SHIPPED.add(sc)
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
@@ -71,7 +147,8 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
       - ANSI off: reference semantics are null-on-bad-cast
 
     Idempotent and memoized per session object: the first call pins and
-    ships, later calls return immediately (see _PINNED above).
+    ships (shipping is itself memoized per SparkContext), later calls
+    return immediately (see _PINNED above).
     """
     if spark in _PINNED:
         return spark
@@ -172,4 +249,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package(spark)
     return spark

@@ -122,6 +122,21 @@ def test_enrich_to_parquet_roundtrip(spark, news_jsonl, tmp_path, monkeypatch):
     assert set(CLEAN_COLUMNS + ENRICHED_EXTRA_COLUMNS) == set(back.columns)
 
 
+def test_enrich_to_parquet_leaves_session_confs(spark, news_jsonl, tmp_path, monkeypatch):
+    """The stage runs on the session's Arrow batch size and must not
+    change it for the queries that follow."""
+    monkeypatch.setenv("DISABLE_LLM", "1")
+    from project_market_pulse_etl_pipeline_with_llm_integration_spark.operators.clean import (
+        extract_and_clean,
+    )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    clean_path = extract_and_clean(spark, news_jsonl, str(tmp_path / "clean"))
+    assert E.enrich_to_parquet(spark, clean_path, str(tmp_path / "enr"), rate_delay=0.0)
+    assert spark.conf.get(key) == before
+
+
 def _make_pure_transport():
     # nested closure: cloudpickle ships it BY VALUE, so Python workers
     # never need to import this test module
